@@ -10,6 +10,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from tests.stream_replay import assert_crash_replay
 from ultimate_data_engineering_project_spark.operators import classifier
 
 _SETTINGS = dict(
@@ -341,20 +342,19 @@ def test_incremental_model_stream_matches_batch(spark, sf_dir, tmp_path):
     )
     assert model_key(prefix) == model_key(first)
 
-    # checkpointed replay (r14 judge ask #7): re-running the exhausted
-    # stream with the SAME checkpoint processes nothing — the on-disk
-    # partials and the derived model are byte-for-byte stable (the
-    # immutable batch=<id> partition contract: a crash-replayed batch
-    # could only overwrite its own partition with identical rows)
-    q2 = run_incremental_quality_model_stream(
+    # crash replay: the last batch re-run after a crash before its
+    # commit overwrites its own partitions with identical rows, so the
+    # on-disk partials and the derived model are unchanged
+    assert_crash_replay(
         spark,
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*"),
-        counts_dir, dstats_dir, str(tmp_path / "ckpt"),
-        dim=dim,
+        q,
+        lambda: run_incremental_quality_model_stream(
+            spark, stream, counts_dir, dstats_dir, str(tmp_path / "ckpt"),
+            dim=dim,
+        ),
+        str(tmp_path / "ckpt"),
+        [counts_dir, dstats_dir],
     )
-    q2.awaitTermination(300)
     replayed = classifier.nb_model_from_partials(
         spark, counts_dir, dstats_dir, dim=dim
     )

@@ -2708,14 +2708,15 @@ def test_bpe_segment_words_reproduces_training_vocab(spark):
         )
         for r in vframe.collect()
     }
+    # a NULL word passes the separator guard and segments to NULL
     words = spark.createDataFrame(
-        [(w,) for w in want], "word string"
+        [(w,) for w in want] + [(None,)], "word string"
     )
     got = {
-        r["word"]: tuple(r["__toks"])
+        r["word"]: r["__toks"] and tuple(r["__toks"])
         for r in bpe_segment_words(words, merges).collect()
     }
-    assert got == want
+    assert got == {**want, None: None}
 
 
 def test_bpe_segment_words_deep_rule_chain(spark):

@@ -26,6 +26,7 @@ from ultimate_data_engineering_project_spark.streaming.pipelines import (
     stream_running_totals,
     write_bronze_stream,
 )
+from tests.stream_replay import assert_crash_replay
 
 
 def ts(s):
@@ -631,6 +632,60 @@ def test_incremental_dedup_stream_matches_batch(spark, sf_dir, tmp_path):
         if batch_of(r.id_a) != batch_of(r.id_b)  # cross-batch only
     }
     assert got == want and len(want) > 0
+    assert_crash_replay(
+        spark,
+        q,
+        lambda: run_incremental_dedup_stream(
+            spark,
+            stream,
+            str(tmp_path / "index"),
+            str(tmp_path / "pairs"),
+            str(tmp_path / "ckpt"),
+        ),
+        str(tmp_path / "ckpt"),
+        [str(tmp_path / d) for d in ("index", "index_docs", "pairs")],
+    )
+
+
+def test_incremental_dedup_stream_uri_roots(spark, sf_dir, tmp_path):
+    """History is found through the Hadoop FileSystem of the root, so
+    ``file://`` roots dedup across batches exactly like plain paths (a
+    Python-glob history probe never matched a scheme-prefixed root and
+    silently found no pairs)."""
+    from ultimate_data_engineering_project_spark.sources.readers import load_table
+    from ultimate_data_engineering_project_spark.streaming.pipelines import (
+        run_incremental_dedup_stream,
+    )
+
+    docs = load_table(spark, sf_dir, "documents")
+    n = docs.count()
+    third = n // 3
+    src = str(tmp_path / "docs_src")
+    for i, (lo, hi) in enumerate([(0, third), (third, 2 * third), (2 * third, n)]):
+        docs.filter(
+            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
+        ).coalesce(1).write.parquet(src + f"/b{i}")
+    stream = (
+        spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src + "/b*")
+    )
+
+    def pairs(prefix, name):
+        root = prefix + str(tmp_path / name)
+        q = run_incremental_dedup_stream(
+            spark, stream, root + "/index", root + "/pairs", root + "/ckpt"
+        )
+        q.awaitTermination(300)
+        assert q.exception() is None
+        return {
+            (r.new_id, r.old_id, r.jaccard)
+            for r in spark.read.parquet(root + "/pairs").collect()
+        }
+
+    plain = pairs("", "plain")
+    assert len(plain) > 0
+    assert pairs("file://", "uri") == plain
 
 
 def test_incremental_ann_stream_matches_batch(spark, sf_dir, tmp_path):
@@ -701,6 +756,22 @@ def test_incremental_ann_stream_matches_batch(spark, sf_dir, tmp_path):
     import os as _os
 
     assert not _glob.glob(_os.path.join(str(tmp_path / "matches"), "batch=0", "*"))
+    assert_crash_replay(
+        spark,
+        q,
+        lambda: run_incremental_ann_stream(
+            spark,
+            stream,
+            str(tmp_path / "ivf_index"),
+            str(tmp_path / "matches"),
+            str(tmp_path / "ann_ckpt"),
+            centroids,
+            k=3,
+            n_probe=2,
+        ),
+        str(tmp_path / "ann_ckpt"),
+        [str(tmp_path / "ivf_index"), str(tmp_path / "matches")],
+    )
 
 
 def test_cdc_quarantine_routes_corrupt_envelopes(spark, tmp_path):
@@ -912,6 +983,23 @@ def test_incremental_pq_stream_matches_batch(spark, sf_dir, tmp_path):
             emb, similarity.pq_encode(emb, codebooks), codebooks,
             k=3, rerank=6,
         )
+    assert_crash_replay(
+        spark,
+        q,
+        lambda: run_incremental_pq_stream(
+            spark,
+            stream,
+            str(tmp_path / "pq_codes"),
+            str(tmp_path / "pq_matches"),
+            str(tmp_path / "pq_ckpt"),
+            codebooks,
+            docs_dir=str(tmp_path / "pq_docs"),
+            k=3,
+            rerank=6,
+        ),
+        str(tmp_path / "pq_ckpt"),
+        [str(tmp_path / d) for d in ("pq_codes", "pq_matches", "pq_docs")],
+    )
 
 
 def test_cdc_stream_avro_envelope_end_to_end(spark, tmp_path):
@@ -1442,6 +1530,15 @@ def test_incremental_bm25_stream_matches_batch(spark, sf_dir, tmp_path):
     assert [
         (r["doc_id"], r["score"], r["rank"]) for r in prefix.collect()
     ] == [(r["doc_id"], r["score"], r["rank"]) for r in full0.collect()]
+    assert_crash_replay(
+        spark,
+        q,
+        lambda: run_incremental_bm25_stream(
+            spark, stream, index_dir, stats_dir, str(tmp_path / "ckpt")
+        ),
+        str(tmp_path / "ckpt"),
+        [index_dir, stats_dir],
+    )
 
 
 def test_incremental_bpe_encode_stream_matches_batch(spark, sf_dir, tmp_path):
@@ -1449,8 +1546,8 @@ def test_incremental_bpe_encode_stream_matches_batch(spark, sf_dir, tmp_path):
     documents corpus (save/load round-trip pinned) stream-encodes the
     DISJOINT part-name corpus micro-batch by micro-batch — the union
     of per-batch outputs equals a one-shot bpe_encode_docs with
-    subword OOV segmentation, and a checkpointed re-run of the
-    exhausted stream changes nothing (replay idempotence)."""
+    subword OOV segmentation, and a crash-replayed last batch changes
+    nothing (replay idempotence)."""
     from ultimate_data_engineering_project_spark.operators import text as T
     from ultimate_data_engineering_project_spark.sources.readers import (
         load_table,
@@ -1501,16 +1598,17 @@ def test_incremental_bpe_encode_stream_matches_batch(spark, sf_dir, tmp_path):
         map(tuple, full.collect())
     )
 
-    # replay idempotence: re-running the exhausted stream with the same
-    # checkpoint processes nothing and the outputs are unchanged
-    q2 = run_incremental_bpe_encode_stream(
+    # replay idempotence: the last batch replayed after a crash before
+    # its commit leaves the outputs unchanged
+    assert_crash_replay(
         spark,
-        spark.readStream.schema(part.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src + "/b*"),
-        tok_dir, out_dir, ckpt,
+        q,
+        lambda: run_incremental_bpe_encode_stream(
+            spark, stream, tok_dir, out_dir, ckpt
+        ),
+        ckpt,
+        [out_dir],
     )
-    q2.awaitTermination(300)
     inc2 = spark.read.parquet(out_dir + "/batch=*")
     assert sorted(map(tuple, inc2.collect())) == sorted(
         map(tuple, full.collect())
@@ -1634,6 +1732,21 @@ def test_incremental_span_stream_matches_batch(spark, sf_dir, tmp_path):
         if batch_of(r.doc_a) != batch_of(r.doc_b)
     }
     assert got == want and len(want) > 0
+    assert_crash_replay(
+        spark,
+        q,
+        lambda: run_incremental_span_stream(
+            spark,
+            stream,
+            str(tmp_path / "span_idx"),
+            str(tmp_path / "spans"),
+            str(tmp_path / "ckpt"),
+            w=24,
+            stride=4,
+        ),
+        str(tmp_path / "ckpt"),
+        [str(tmp_path / "span_idx"), str(tmp_path / "spans")],
+    )
 
 
 def test_incremental_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
@@ -1683,6 +1796,15 @@ def test_incremental_rollup_stream_matches_batch(spark, sf_dir, tmp_path):
     # exactly one partial partition per micro-batch landed
     import glob as _glob
     assert len(_glob.glob(rollup_dir + "/batch=*")) == 3
+    assert_crash_replay(
+        spark,
+        q,
+        lambda: run_incremental_rollup_stream(
+            spark, stream, rollup_dir, str(tmp_path / "ckpt")
+        ),
+        str(tmp_path / "ckpt"),
+        [rollup_dir],
+    )
 
     # replay: rewriting batch 1's partition with the same slice's
     # partials (what a crash-between-write-and-commit replay does)

@@ -76,25 +76,6 @@ def _dist2_int(a: Column, b: Column) -> Column:
     )
 
 
-def _nearest(cents_lit: Column, qv: Column) -> Column:
-    """struct<dist2, cid> of the nearest centroid (ties -> lowest cid;
-    array_sort on struct<bigint,int> orders lexicographically).
-
-    Reference semantics — the hot path uses :func:`_dist_array_sql`
-    instead: higher-order functions (transform/aggregate/zip_with)
-    are ALWAYS interpreted in Spark (no whole-stage codegen), so this
-    per-centroid fold costs k·dim lambda evaluations per row; the
-    unrolled arithmetic expression compiles."""
-    return F.array_sort(
-        F.transform(
-            cents_lit,
-            lambda c, i: F.struct(
-                _dist2_int(qv, c).alias("dist2"), i.alias("cid")
-            ),
-        )
-    )[0]
-
-
 def _assign_kernel(centroids: list[list[int]], keep_cols: list[str]):
     """Arrow-vectorized assignment kernel (mapInPandas): squared-L2 of
     each row's quantized vector against every centroid in ONE int64
@@ -102,8 +83,7 @@ def _assign_kernel(centroids: list[list[int]], keep_cols: list[str]):
     (≤ dim·(2·QUANT_SCALE)² ≈ 2.6e14 per product sum, far under
     int64), so the result is bit-identical to the sequential
     :func:`_dist2_int` fold and to the SQL oracle.  argmin returns the
-    FIRST minimum — ties to the lowest centroid id, same as the
-    reference path.
+    FIRST minimum — ties to the lowest centroid id.
 
     Why a kernel and not column expressions (§2.11 documented
     inexpressible-efficiently case): Spark's higher-order functions
@@ -334,15 +314,6 @@ def semantic_dedup_pairs(
     return assigned.groupBy("cluster_id").applyInPandas(
         pairs_fn,
         "cluster_id long, a_id long, b_id long, cosine_sim double",
-    )
-
-
-def cluster_summary(assigned: DataFrame) -> DataFrame:
-    """Per-cluster size + total inertia (decimal(38,0) so a trillion-row
-    cluster's dist² sum cannot wrap int64 — the fraud-trainer rule)."""
-    return assigned.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.sum(F.col("dist2").cast("decimal(38,0)")).alias("inertia"),
     )
 
 

@@ -49,10 +49,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def stopword_count(text: Column, stopwords: tuple[str, ...] = STOPWORDS) -> Column:
-    return F.size(F.filter(tokens(text), lambda t: t.isin(*stopwords)))
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-document quality features: token count, char count, mean
     token length, stopword ratio, distinct-token ratio.  The standard
@@ -1350,7 +1346,11 @@ def bpe_segment_words(
     # the raise fires wherever the segmentation is actually computed.
     sep2 = sep + sep
     out = words.filter(
-        F.when(~F.col(word_col).contains(sep), F.lit(True)).otherwise(
+        # ~contains(NULL) is NULL, which would reach the raise: a NULL
+        # word passes through and segments to NULL tokens
+        F.when(
+            F.col(word_col).isNull() | ~F.col(word_col).contains(sep), F.lit(True)
+        ).otherwise(
             F.raise_error(
                 F.lit(
                     "bpe_segment_words separator occurs inside a word to "

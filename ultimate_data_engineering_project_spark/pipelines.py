@@ -125,13 +125,6 @@ def gold_fraud_alerts(transactions: DataFrame) -> DataFrame:
     return circ.unionByName(velo)
 
 
-def gold_dq_metrics(
-    customers: DataFrame, accounts: DataFrame, transactions: DataFrame
-) -> DataFrame:
-    """Dashboard #5: data-quality metrics (README.md:40)."""
-    return quality.dq_report(customers, accounts, transactions)
-
-
 def account_balances(transactions: DataFrame) -> DataFrame:
     """Current balance per account from the ledger (X7 — final value of
     the running balance, which is just the signed-delta total; replaces

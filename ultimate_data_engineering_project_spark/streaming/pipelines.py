@@ -95,22 +95,19 @@ def stream_sessionized(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def write_bronze_stream(
-    df: DataFrame, path: str, checkpoint: str, available_now: bool = True
-):
+def write_bronze_stream(df: DataFrame, path: str, checkpoint: str):
     """T6: append stream to partitioned parquet with a checkpoint
     (exactly-once file sink).  AvailableNow drains the backlog and
     stops — the testable trigger; production uses processingTime."""
-    writer = (
+    return (
         df.withColumn("_ingest_date", F.to_date("ts"))
         .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .partitionBy("_ingest_date")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup(
@@ -522,9 +519,7 @@ def run_cdc_stream(
                 # of double-counting every quarantined frame (the same
                 # idempotence rule the incremental index streams use);
                 # the batch id doubles as DLQ provenance on read-back
-                quarantined.write.mode("overwrite").parquet(
-                    os.path.join(quarantine_dir, f"batch={batch_id}")
-                )
+                _write_batch(quarantined, quarantine_dir, batch_id)
         else:
             changes = parse_debezium_envelope(batch_df, row_schema)
         import shutil
@@ -909,22 +904,27 @@ def cdc_apply_batch(
     return kept.unionByName(upserts).join(deletes, on=keys, how="left_anti")
 
 
+def _write_batch(df: DataFrame, root: str, batch_id: int, partition_by=()) -> None:
+    """Overwrite ``root/batch=<batch_id>`` with ``df`` — the one write
+    of every ``batch=<id>`` layout (see `_batch_partitioned_stream`);
+    ``partition_by`` splits the batch partition further."""
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(os.path.join(root, f"batch={batch_id}"))
+
+
 def _read_batch_partitions(
     spark: SparkSession, root: str, before_batch: int
 ) -> DataFrame | None:
     """``batch=<id>``-partitioned history STRICTLY BEFORE the current
-    batch — the shared probe-side read of every incremental index
-    stream (dedup, IVF, PQ).  A REPLAYED batch (crash between partition
-    writes and checkpoint commit) would otherwise see its own rows in
-    the index and match against itself; excluding ``batch >=
-    before_batch`` restores the exact pre-batch history, keeping the
-    ``batch=<id>`` overwrite genuinely idempotent.  ``basePath`` keeps
-    partition discovery rooted; returns None when no history exists yet
-    (local filesystem layout — these streams persist their index on the
-    driver-visible store)."""
-    import glob
-
-    if not glob.glob(os.path.join(root, "batch=*", "*.parquet")):
+    batch (the replay-safe read, see `_batch_partitioned_stream`), or
+    None when there is none yet.  The listing goes through the Hadoop
+    FileSystem of ``root``, so scheme-prefixed roots (``file://``,
+    ``hdfs://``, ``s3a://``) find their history like plain paths do;
+    ``basePath`` keeps partition discovery rooted."""
+    glob = spark._jvm.org.apache.hadoop.fs.Path(f"{root.rstrip('/')}/batch=*/*.parquet")
+    if not glob.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(glob):
         return None
     df = (
         spark.read.option("basePath", root)
@@ -933,6 +933,55 @@ def _read_batch_partitions(
         .drop("batch")
     )
     return df if df.limit(1).count() else None
+
+
+def _batch_partitioned_stream(
+    source: DataFrame, checkpoint: str, step, cols: list[str] | None = None
+):
+    """The shared skeleton of every incremental ``batch=<id>`` stream:
+    ``foreachBatch`` under ``checkpointLocation`` with the AvailableNow
+    trigger (drain the backlog and stop — the testable trigger).
+
+    Per micro-batch, ``cols`` (when given) are selected and pinned with
+    one eager ``localCheckpoint`` so every output re-reads the batch
+    instead of re-running the source scan; then ``step(batch_df,
+    batch_id)`` returns its outputs as an ordered mapping ``{root:
+    frame}`` (or ``{root: (frame, partition_cols)}``), written in that
+    order, each to ``root/batch=<batch_id>`` with overwrite.
+
+    Replay idempotence — the contract every caller inherits.  A crash
+    between a batch's writes and its checkpoint commit makes the
+    restarted query re-run that batch id over the same input:
+      * writes are OVERWRITES of the batch's own ``batch=<id>``
+        partition, so a replay rewrites it instead of duplicating rows
+        (no read-side dedup over the accumulated history, which would
+        shuffle the whole corpus every batch and void the incremental
+        contract); outputs are exactly-once for the same reason;
+      * history reads (`_read_batch_partitions`) see only ``batch <
+        id``, so a replayed batch probes the exact pre-batch history
+        instead of matching its own half-written rows (a near-dup
+        probe would self-match at jaccard 1.0).
+    Cross-batch state is the on-disk tables, never executor memory, so
+    a restart resumes from the checkpoint with full history intact.
+
+    Per-batch rows in and duration need no listener code:
+    ``StreamingQuery.recentProgress`` carries ``batchId``,
+    ``numInputRows`` and ``durationMs`` for each batch, at no extra
+    Spark job."""
+
+    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if cols is not None:
+            batch_df = batch_df.select(*cols).localCheckpoint(eager=True)
+        for root, out in step(batch_df, batch_id).items():
+            frame, parts = out if isinstance(out, tuple) else (out, ())
+            _write_batch(frame, root, batch_id, parts)
+
+    return (
+        source.writeStream.foreachBatch(apply_batch)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_incremental_dedup_stream(
@@ -948,35 +997,22 @@ def run_incremental_dedup_stream(
     num_hashes: int = 16,
     bands: int = 4,
     jaccard_threshold: float = 0.5,
-    available_now: bool = True,
 ):
     """X1/X2 on a stream: near-dup dedup of an ARRIVING corpus against
     everything seen so far, via the persisted band index
     (operators/dedup.minhash_band_index_md5 layout).
 
-    Per micro-batch (foreachBatch — the cross-batch state is the index
-    table itself, exactly the CDC pattern of run_cdc_stream):
+    Per micro-batch:
       1. probe: batch docs banded and equi-joined against the on-disk
          index; candidates verify with exact Jaccard (old text re-read
          only for candidate ids) -> verified (new_id, old_id, jaccard)
-         pairs APPENDED to ``pairs_dir``;
+         pairs under ``pairs_dir``;
       2. extend: the batch's own band rows + its (id, text) snapshot
-         append to the index, so later batches dedup against it.
+         land in the index, so later batches dedup against it.
 
     Within-batch duplicates are handled by the batch pair path upstream
     (or a stream_dedup stage); this operator owns the batch-vs-history
-    half.  State never lives in executor memory: the index is parquet,
-    so a restart resumes from the checkpoint with full history intact.
-    Idempotence is WRITE-time: every output lands under a
-    ``batch=<id>`` subdirectory with overwrite, so a replayed batch
-    rewrites its own partition instead of duplicating rows — no
-    read-side dedup over the accumulated history (which would shuffle
-    the whole corpus every batch and void the incremental contract);
-    the pairs output is exactly-once for the same reason.  The probe
-    additionally reads only index/docs partitions with ``batch <
-    batch_id``, so a batch replayed after a crash-between-write-and-
-    commit sees the exact pre-batch history rather than its own
-    half-written band rows (which would self-match at jaccard 1.0).
+    half.  Replay idempotence and layout: `_batch_partitioned_stream`.
     At 100 TB the index is narrow band rows (partition by band_key
     range for co-located probes) — the corpus text is stored once in
     the companion ``_docs`` table and touched only per-candidate.
@@ -985,50 +1021,25 @@ def run_incremental_dedup_stream(
 
     docs_dir = index_dir.rstrip("/") + "_docs"
 
-    def _read_batches(root: str, before_batch: int) -> DataFrame | None:
-        return _read_batch_partitions(spark, root, before_batch)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
-        index = _read_batches(index_dir, batch_id)
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
+        out = {}
+        index = _read_batch_partitions(spark, index_dir, batch_id)
         if index is not None:
-            old = _read_batches(docs_dir, batch_id)
-            pairs = dedup.minhash_match_index_md5(
-                batch_df,
-                index,
-                old,
-                id_col,
-                text_col,
-                shingle_n=shingle_n,
-                num_hashes=num_hashes,
-                bands=bands,
-                jaccard_threshold=jaccard_threshold,
+            out[pairs_dir] = dedup.minhash_match_index_md5(
+                batch_df, index, _read_batch_partitions(spark, docs_dir, batch_id),
+                id_col, text_col, shingle_n=shingle_n, num_hashes=num_hashes,
+                bands=bands, jaccard_threshold=jaccard_threshold,
             )
-            # overwrite of THIS batch's partition = replay-idempotent
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(pairs_dir, f"batch={batch_id}")
-            )
-        new_bands = dedup.minhash_band_index_md5(
-            batch_df,
-            id_col,
-            text_col,
-            shingle_n=shingle_n,
-            num_hashes=num_hashes,
-            bands=bands,
+        out[index_dir] = dedup.minhash_band_index_md5(
+            batch_df, id_col, text_col,
+            shingle_n=shingle_n, num_hashes=num_hashes, bands=bands,
         )
-        new_bands.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(docs_dir, f"batch={batch_id}")
-        )
+        out[docs_dir] = batch_df
+        return out
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_partitioned_stream(
+        docs, checkpoint, step, cols=[id_col, text_col]
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_ann_stream(
@@ -1043,7 +1054,6 @@ def run_incremental_ann_stream(
     vec_col: str = "embedding",
     k: int = 5,
     n_probe: int = 4,
-    available_now: bool = True,
 ):
     """X3 on a stream: approximate-nearest-neighbor search of ARRIVING
     vectors against everything indexed so far, via a persisted IVF
@@ -1051,13 +1061,12 @@ def run_incremental_ann_stream(
     similarity-search twin of `run_incremental_dedup_stream`, giving
     ANN the same per-batch-cost incremental contract dedup has.
 
-    Per micro-batch (foreachBatch — cross-batch state IS the on-disk
-    index, never executor memory):
+    Per micro-batch:
       1. probe: the batch's vectors expand to their n_probe nearest
          centroids and equi-join the index on the inverted-list id;
          exact cosine re-ranks to top-k (new vec x indexed history) ->
          ``matches_dir``;
-      2. extend: the batch's own (id, vec, __cid) rows append to the
+      2. extend: the batch's own (id, vec, __cid) rows land in the
          index so later batches search against them.
 
     The centroid matrix is CONFIG (train once on a bootstrap corpus
@@ -1065,47 +1074,28 @@ def run_incremental_ann_stream(
     — retraining per batch would silently re-key the inverted lists
     and invalidate history.  Per-batch cost is O(batch x probed-list
     occupancy), never O(corpus): the batch side broadcasts, the index
-    contributes only its probed lists.  Idempotence follows the dedup
-    stream's two rules: every write lands under ``batch=<id>`` with
-    overwrite, and the probe reads only index partitions with
-    ``batch < batch_id`` — a replayed batch sees the exact pre-batch
-    history instead of self-matching on its own half-written rows.
-    At 100 TB, partition the index by ``__cid`` range so each probe
-    touches only co-located inverted lists.
+    contributes only its probed lists.  Replay idempotence and layout:
+    `_batch_partitioned_stream`.  At 100 TB, partition the index by
+    ``__cid`` range so each probe touches only co-located inverted
+    lists.
     """
     from ultimate_data_engineering_project_spark.operators import similarity
 
-    def _read_index(before_batch: int) -> DataFrame | None:
-        return _read_batch_partitions(spark, index_dir, before_batch)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        index = _read_index(batch_id)
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
+        out = {}
+        index = _read_batch_partitions(spark, index_dir, batch_id)
         if index is not None:
-            matches = similarity.ivf_probe_index(
-                batch_df,
-                index,
-                centroids,
-                id_col,
-                vec_col,
-                k=k,
-                n_probe=n_probe,
+            out[matches_dir] = similarity.ivf_probe_index(
+                batch_df, index, centroids, id_col, vec_col, k=k, n_probe=n_probe
             )
-            matches.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch={batch_id}")
-            )
-        similarity.ivf_index_frame(
+        out[index_dir] = similarity.ivf_index_frame(
             batch_df, centroids, id_col, vec_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
         )
+        return out
 
-    writer = vectors.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_partitioned_stream(
+        vectors, checkpoint, step, cols=[id_col, vec_col]
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_pq_stream(
@@ -1121,7 +1111,6 @@ def run_incremental_pq_stream(
     vec_col: str = "embedding",
     k: int = 5,
     rerank: int = 0,
-    available_now: bool = True,
 ):
     """X3's COMPRESSED scan on a stream: arriving vectors ADC-probe the
     PQ codes persisted so far, then append their own codes — the PQ
@@ -1129,14 +1118,13 @@ def run_incremental_pq_stream(
     contract for every X3 path (brute/LSH have batch twins, IVF and PQ
     stream).
 
-    Per micro-batch (foreachBatch — cross-batch state IS the on-disk
-    codes frame, never executor memory):
+    Per micro-batch:
       1. probe: the batch broadcasts with per-query ADC look-up tables
-         and scans ONLY history codes partitions (``batch < batch_id``)
-         at m array lookups per code row
-         (operators/similarity.pq_probe_codes) -> ``matches_dir``;
+         and scans ONLY history codes partitions at m array lookups
+         per code row (operators/similarity.pq_probe_codes) ->
+         ``matches_dir``;
       2. extend: the batch's own ``(id, pq_codes)`` rows land under
-         ``codes_dir/batch=<id>`` so later batches scan them.
+         ``codes_dir`` so later batches scan them.
 
     The codebooks are CONFIG (train once with similarity.pq_train and
     pass them in) — retraining per batch would re-key every historical
@@ -1151,11 +1139,7 @@ def run_incremental_pq_stream(
     I/O before compression), so per-batch cost is O(batch x |codes
     history|) in CODE units — the cheapest full-coverage scan there
     is — while IVF's probe is cheaper still but only covers probed
-    lists.  Idempotence follows the dedup stream's two rules: every
-    write lands under ``batch=<id>`` with overwrite, and the probe
-    reads only ``batch < batch_id`` partitions, so a crash-replayed
-    batch sees the exact pre-batch history instead of matching its own
-    half-written rows.
+    lists.  Replay idempotence and layout: `_batch_partitioned_stream`.
     """
     from ultimate_data_engineering_project_spark.operators import similarity
 
@@ -1165,45 +1149,27 @@ def run_incremental_pq_stream(
             "the exact re-rank stage"
         )
 
-    def _read_hist(base: str, before_batch: int) -> DataFrame | None:
-        return _read_batch_partitions(spark, base, before_batch)
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, vec_col).localCheckpoint(eager=True)
-        codes_hist = _read_hist(codes_dir, batch_id)
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
+        out = {}
+        codes_hist = _read_batch_partitions(spark, codes_dir, batch_id)
         if codes_hist is not None:
-            corpus_hist = (
-                _read_hist(docs_dir, batch_id) if rerank > k else None
+            corpus = None
+            if rerank > k:
+                corpus = _read_batch_partitions(spark, docs_dir, batch_id)
+            out[matches_dir] = similarity.pq_probe_codes(
+                batch_df, codes_hist, codebooks, id_col, vec_col,
+                k=k, corpus=corpus, rerank=rerank,
             )
-            matches = similarity.pq_probe_codes(
-                batch_df,
-                codes_hist,
-                codebooks,
-                id_col,
-                vec_col,
-                k=k,
-                corpus=corpus_hist,
-                rerank=rerank,
-            )
-            matches.write.mode("overwrite").parquet(
-                os.path.join(matches_dir, f"batch={batch_id}")
-            )
-        similarity.pq_encode(
+        out[codes_dir] = similarity.pq_encode(
             batch_df, codebooks, id_col, vec_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"batch={batch_id}")
         )
         if rerank > k:
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(docs_dir, f"batch={batch_id}")
-            )
+            out[docs_dir] = batch_df
+        return out
 
-    writer = vectors.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_partitioned_stream(
+        vectors, checkpoint, step, cols=[id_col, vec_col]
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_heavy_hitters(
@@ -1293,7 +1259,6 @@ def run_incremental_bm25_stream(
     id_col: str = "doc_id",
     text_col: str = "text",
     shards: int | None = None,
-    available_now: bool = True,
 ):
     """The lexical-search face of the incremental contract (dedup, IVF,
     PQ have it — this closes the index family): arriving documents
@@ -1301,17 +1266,15 @@ def run_incremental_bm25_stream(
     workload probes an always-current index without EVER re-tokenizing
     the corpus.
 
-    Per batch (foreachBatch — cross-batch state IS the on-disk index):
-    the batch's postings (term, doc_id, tf, dl) land under
+    Per batch: the batch's postings (term, doc_id, tf, dl) land under
     ``index_dir/batch=<id>/shard=<hash(term) % shards>`` and its ONE
     stats row (n docs, total length) under ``stats_dir/batch=<id>``.
     Global statistics are never maintained in place — they are the SUM
-    of immutable per-batch partials, which is what makes the layout
-    replay-idempotent: a crash-replayed batch overwrites its own
-    ``batch=<id>`` partitions and nothing else (the dedup stream's
-    rule).  Probe cost: term-shard directory pruning keeps the scan at
-    |query terms|/shards of the index regardless of corpus size;
-    stats/lexicon derive from the pruned subset + the tiny partials.
+    of immutable per-batch partials, which keeps the layout
+    replay-idempotent (`_batch_partitioned_stream`).  Probe cost:
+    term-shard directory pruning keeps the scan at |query terms|/shards
+    of the index regardless of corpus size; stats/lexicon derive from
+    the pruned subset + the tiny partials.
 
     Query with operators/text.bm25_query_incremental; equality with a
     from-scratch full-corpus bm25_topk is pinned by the stream test.
@@ -1320,26 +1283,19 @@ def run_incremental_bm25_stream(
 
     n_shards = _text.INDEX_SHARDS if shards is None else shards
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
         postings, _, stats = _text.bm25_index(
             batch_df, id_col=id_col, text_col=text_col
         )
-        postings.withColumn(
-            "shard", F.pmod(F.xxhash64("term"), F.lit(n_shards)).cast("int")
-        ).write.mode("overwrite").partitionBy("shard").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
-        stats.write.mode("overwrite").parquet(
-            os.path.join(stats_dir, f"batch={batch_id}")
-        )
+        shard = F.pmod(F.xxhash64("term"), F.lit(n_shards)).cast("int")
+        return {
+            index_dir: (postings.withColumn("shard", shard), ["shard"]),
+            stats_dir: stats,
+        }
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_partitioned_stream(
+        docs, checkpoint, step, cols=[id_col, text_col]
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_bpe_encode_stream(
@@ -1351,7 +1307,6 @@ def run_incremental_bpe_encode_stream(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """The TOKENIZER-SERVICE face of the BPE family (r12): a frozen
     tokenizer (``text.save_bpe_tokenizer`` — vocab + merge table +
@@ -1367,35 +1322,26 @@ def run_incremental_bpe_encode_stream(
     data, so the per-batch cost is one join wave + a tiny
     segmentation frame whatever the merge depth.
 
-    Per batch (foreachBatch): the encoded per-doc rows
-    ``(id, n_tokens, token_fingerprint)`` land under
-    ``out_dir/batch=<id>`` — immutable per-batch partitions, never
-    update-in-place, so a crash-replayed batch overwrites its own
-    partition and nothing else (the BM25/dedup-stream
-    replay-idempotence rule).  Equality with a one-shot
-    ``bpe_encode_docs(oov="subword")`` over the same documents is
-    pinned by the stream test, checkpoint restart included."""
+    Per batch: the encoded per-doc rows ``(id, n_tokens,
+    token_fingerprint)`` land under ``out_dir/batch=<id>`` (replay
+    idempotence: `_batch_partitioned_stream`).  Equality with a
+    one-shot ``bpe_encode_docs(oov="subword")`` over the same
+    documents is pinned by the stream test, crash replay included."""
     from ultimate_data_engineering_project_spark.operators import text as _text
 
     merges, vocab, sep = _text.load_bpe_tokenizer(spark, tok_dir)
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(
-            eager=True
-        )
-        _text.bpe_encode_docs(
-            batch_df, 0, id_col=id_col, text_col=text_col, sep=sep,
-            vocab=vocab, merges=merges, oov="subword",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
+        return {
+            out_dir: _text.bpe_encode_docs(
+                batch_df, 0, id_col=id_col, text_col=text_col, sep=sep,
+                vocab=vocab, merges=merges, oov="subword",
+            )
+        }
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_partitioned_stream(
+        docs, checkpoint, step, cols=[id_col, text_col]
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_quality_model_stream(
@@ -1407,7 +1353,6 @@ def run_incremental_quality_model_stream(
     *,
     dim: int | None = None,
     text_col: str = "text",
-    available_now: bool = True,
 ):
     """The CONTINUOUS-AGGREGATE face of the trained quality classifier
     (operators/classifier.py): arriving documents fold into the
@@ -1415,16 +1360,13 @@ def run_incremental_quality_model_stream(
     filter stays current without ever re-tokenizing history — the
     model is literally a mergeable aggregate, not a retrain.
 
-    Per batch (foreachBatch — cross-batch state IS the on-disk
-    partials): the batch's (feature, c_pos, c_neg) token counts land
+    Per batch: the batch's (feature, c_pos, c_neg) token counts land
     under ``counts_dir/batch=<id>`` and its ONE doc-count row under
-    ``dstats_dir/batch=<id>``.  Immutable per-batch partials, never
-    update-in-place: a crash-replayed batch overwrites its own
-    ``batch=<id>`` partitions and nothing else (the BM25/dedup-stream
-    replay-idempotence rule).  classifier.nb_model_from_partials
-    derives weights from any prefix of batches — bit-identical to a
-    one-shot train on the same documents (exact BIGINT statistics),
-    pinned by the stream test.
+    ``dstats_dir/batch=<id>`` — immutable per-batch partials (replay
+    idempotence: `_batch_partitioned_stream`).
+    classifier.nb_model_from_partials derives weights from any prefix
+    of batches — bit-identical to a one-shot train on the same
+    documents (exact BIGINT statistics), pinned by the stream test.
 
     Scale: each batch pays one map-side-combined shuffle capped at
     ``dim`` output rows; deriving the model reads |batches| x <=dim
@@ -1436,24 +1378,16 @@ def run_incremental_quality_model_stream(
 
     n_dim = _clf.DEFAULT_DIM if dim is None else dim
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(text_col).localCheckpoint(eager=True)
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
         label = _clf.integer_quality_label(text_col)
-        _clf.nb_token_counts(
-            batch_df, label, dim=n_dim, text_col=text_col
-        ).write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"batch={batch_id}")
-        )
-        _clf.nb_doc_counts(batch_df, label).write.mode("overwrite").parquet(
-            os.path.join(dstats_dir, f"batch={batch_id}")
-        )
+        return {
+            counts_dir: _clf.nb_token_counts(
+                batch_df, label, dim=n_dim, text_col=text_col
+            ),
+            dstats_dir: _clf.nb_doc_counts(batch_df, label),
+        }
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _batch_partitioned_stream(docs, checkpoint, step, cols=[text_col])
 
 
 def run_incremental_span_stream(
@@ -1470,7 +1404,6 @@ def run_incremental_span_stream(
     merge_gap: int | None = None,
     max_occ: int | None = None,
     min_anchors: int = 1,
-    available_now: bool = True,
 ):
     """Substring-span dedup on a stream (X1/X2 extension — the
     incremental face of operators/dedup.duplicated_spans): arriving
@@ -1478,15 +1411,13 @@ def run_incremental_span_stream(
     indexed so far, then their own anchors extend the index — the same
     per-batch-cost contract dedup/IVF/PQ/BM25 carry.
 
-    Per micro-batch (foreachBatch — cross-batch state IS the on-disk
-    anchor index):
+    Per micro-batch:
       1. probe: the batch's content-defined anchors equi-join the
-         HISTORY index (``batch < batch_id`` partitions only — the
-         replay-idempotence read) on the anchor hash; diagonal
-         islands-merge produces ``(doc_a=new, doc_b=old, a_start,
-         b_start, span_len, n_anchors)`` -> ``spans_dir/batch=<id>``;
-      2. extend: the batch's anchor frame lands under
-         ``index_dir/batch=<id>`` (overwrite — idempotent).
+         HISTORY index on the anchor hash; diagonal islands-merge
+         produces ``(doc_a=new, doc_b=old, a_start, b_start, span_len,
+         n_anchors)`` -> ``spans_dir``;
+      2. extend: the batch's anchor frame lands under ``index_dir``.
+    Replay idempotence and layout: `_batch_partitioned_stream`.
 
     ``max_occ`` here caps an anchor hash's occurrences within
     (history + batch) at probe time — a PER-PROBE boilerplate bound;
@@ -1499,8 +1430,8 @@ def run_incremental_span_stream(
 
     gap = 2 * w if merge_gap is None else merge_gap
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.select(id_col, text_col).localCheckpoint(eager=True)
+    def step(batch_df: DataFrame, batch_id: int) -> dict:
+        out = {}
         anchors = dedup.span_anchors(
             batch_df, w=w, stride=stride, id_col=id_col, text_col=text_col
         )
@@ -1523,21 +1454,15 @@ def run_incremental_span_stream(
                     (F.col("a.p") - F.col("b.p")).alias("diag"),
                 )
             )
-            dedup.merge_match_spans(
+            out[spans_dir] = dedup.merge_match_spans(
                 matches, w=w, merge_gap=gap, min_anchors=min_anchors
-            ).write.mode("overwrite").parquet(
-                os.path.join(spans_dir, f"batch={batch_id}")
             )
-        anchors.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
+        out[index_dir] = anchors
+        return out
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_partitioned_stream(
+        docs, checkpoint, step, cols=[id_col, text_col]
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_incremental_rollup_stream(
@@ -1550,7 +1475,6 @@ def run_incremental_rollup_stream(
     key_cols: tuple[str, ...] = ("event_type",),
     value_col: str = "value",
     bucket: str = "day",
-    available_now: bool = True,
     partials_fn=None,
 ):
     """Hypertable-style CONTINUOUS AGGREGATE on a stream (the driver
@@ -1560,14 +1484,12 @@ def run_incremental_rollup_stream(
     time-bucket rollup of an append-only event stream, touching ONLY
     the arriving rows per micro-batch.
 
-    Per micro-batch (foreachBatch): aggregate the batch into mergeable
-    partials (operators/aggregates.rollup_partials — counts, integer
-    micro-unit sum, min, max) and land them under
-    ``rollup_dir/batch=<id>`` with overwrite, the same replay-idempotent
-    layout every incremental index stream here uses: a batch replayed
-    after a crash rewrites its own partition instead of double-counting.
-    No read-modify-write of the rollup and no executor-held state — the
-    partials table IS the state.
+    Per micro-batch: aggregate the batch into mergeable partials
+    (operators/aggregates.rollup_partials — counts, integer micro-unit
+    sum, min, max) under ``rollup_dir/batch=<id>`` (replay idempotence:
+    `_batch_partitioned_stream`; the batch is not pinned, its one
+    aggregate reads it once).  No read-modify-write of the rollup and
+    no executor-held state — the partials table IS the state.
 
     The serving view is `read_rollup`: a per-bucket merge of all batch
     partials (aggregates.merge_rollup).  Late rows need no special
@@ -1596,17 +1518,11 @@ def run_incremental_rollup_stream(
                 bucket=bucket,
             )
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        partials_fn(batch_df).write.mode("overwrite").parquet(
-            os.path.join(rollup_dir, f"batch={batch_id}")
-        )
-
-    writer = events.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_partitioned_stream(
+        events,
+        checkpoint,
+        lambda batch_df, batch_id: {rollup_dir: partials_fn(batch_df)},
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_rollup(
